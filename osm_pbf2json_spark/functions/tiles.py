@@ -8,9 +8,10 @@ decision) cell ids are NOT bit-compatible with Uber H3 / Google S2 — no
 such library exists in this sandbox and parity targets are reference
 outputs, not cell ids. What *is* preserved:
 
-- hex grid with aperture-7 resolution scaling (res 0-15, k-ring ops,
-  ring-by-ring kNN expansion) — axial coordinates on an equirectangular
-  plane, cube-rounded; ids pack (res,q,r) into one int64;
+- hex grid with aperture-7 resolution scaling (res 0-15; the k-ring
+  neighbor join is `operators.spatial.hex_kring_join`) — axial
+  coordinates on an equirectangular plane, cube-rounded; ids pack
+  (res,q,r) into one int64;
 - S2-style space-filling-curve cells: Hilbert curve over a 2^level grid
   (levels 0-29), hierarchical parent/child by id arithmetic, adaptive
   bbox coverings.
@@ -68,43 +69,6 @@ def hex_unpack(cell):
     q = ((cell >> np.int64(30)) & np.int64(0x3FFFFFFF)) - _Q_OFF
     r = (cell & np.int64(0x3FFFFFFF)) - _Q_OFF
     return res, q, r
-
-
-def hex_center(cell):
-    """Cell id → (lon, lat) of the hex center."""
-    res, q, r = hex_unpack(cell)
-    size = HEX_BASE_SIZE / HEX_APERTURE ** (res.astype(np.float64) / 2.0)
-    # inverse of hex_cell's forward transform:
-    # qf = (√3/3·lon − lat/3)/s ; rf = (2/3·lat)/s
-    lat = 1.5 * r * size
-    lon = (q * size + lat / 3.0) * (3.0 / _SQRT3)
-    return lon, lat
-
-
-def hex_k_ring(cell: int, k: int) -> np.ndarray:
-    """All cells within hex-grid distance k of `cell` (single query cell;
-    k-ring for the kNN expansion loop)."""
-    res, q, r = hex_unpack(np.asarray([cell]))
-    res, q, r = int(res[0]), int(q[0]), int(r[0])
-    out = []
-    for dq in range(-k, k + 1):
-        for dr in range(max(-k, -dq - k), min(k, -dq + k) + 1):
-            out.append(
-                (np.int64(res) << np.int64(60))
-                | (np.int64(q + dq + _Q_OFF) << np.int64(30))
-                | np.int64(r + dr + _Q_OFF)
-            )
-    return np.array(out, dtype=np.int64)
-
-
-def hex_ring(cell: int, k: int) -> np.ndarray:
-    """Exactly the cells at hex distance k (hollow ring)."""
-    if k == 0:
-        return np.array([cell], dtype=np.int64)
-    inner = set(hex_k_ring(cell, k - 1).tolist())
-    return np.array(
-        [c for c in hex_k_ring(cell, k).tolist() if c not in inner], dtype=np.int64
-    )
 
 
 def hex_covering_bbox(
@@ -314,19 +278,3 @@ def quad_covering_bbox_batch(
     jj = np.repeat(j0, counts) + within // ni
     cells = (np.int64(level) << np.int64(58)) | _hilbert_d(level, ii, jj)
     return [cells[offs[b] : offs[b] + counts[b]] for b in range(B)]
-
-
-# --- distance ----------------------------------------------------------------
-
-
-def haversine_m(lon1, lat1, lon2, lat2) -> np.ndarray:
-    """Great-circle distance in meters (vectorized)."""
-    r = 6_371_008.8
-    p1 = np.radians(np.asarray(lat1, dtype=np.float64))
-    p2 = np.radians(np.asarray(lat2, dtype=np.float64))
-    dp = p2 - p1
-    dl = np.radians(np.asarray(lon2, dtype=np.float64)) - np.radians(
-        np.asarray(lon1, dtype=np.float64)
-    )
-    a = np.sin(dp / 2.0) ** 2 + np.cos(p1) * np.cos(p2) * np.sin(dl / 2.0) ** 2
-    return 2.0 * r * np.arcsin(np.sqrt(a))

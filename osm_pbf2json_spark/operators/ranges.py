@@ -34,7 +34,11 @@ def interval_overlap_join(
     a small-estimate input would evaluate every candidate pair in the
     narrow probe stage; the pinned shuffle also redistributes a narrow
     input, so no explicit pre-widening exchange is applied (see
-    bbox_self_join)."""
+    bbox_self_join). The hash-join build side is held in memory per
+    reduce partition and cannot spill: one hot (key, bin) — many
+    intervals of one key in one bin — can OOM an executor where a
+    sort-merge join would spill, so keep `bin_size` near the typical
+    interval length."""
 
     def bin_of(c):
         return F.floor(c / bin_size).cast("long")

@@ -8,12 +8,16 @@ Spark-native operators sized for 10¹²-row inputs:
   admin boundaries are ≤10⁵ globally) are indexed into a driver-built
   cell→candidates map and BROADCAST; points stream through a mapInPandas
   kernel that does covering-cell lookup (filter) + vectorized ray-casting
-  (refine). No shuffle of the big side at all.
+  (refine). No shuffle of the big side at all. The grid is derived from
+  the polygons: each one is registered at the finest level whose bbox
+  covering fits a few dozen cells, so cells are sized like the polygons
+  they index (see BroadcastPolygonIndex).
 - `pip_join_cells`: large×large fallback — both sides exploded to
   covering cells, Catalyst plans a plain shuffle/broadcast hash equi-join
   on cell, then the exact test refines. Skewed hot cells are handled by
   AQE skew-join (session default) — and the cell resolution bounds
-  per-cell fanout.
+  per-cell fanout. The join is pinned to SHUFFLE_HASH, whose build side
+  cannot spill (see pip_join_cells).
 - `bbox_join`: cell-bucketed bbox-overlap join expressed ENTIRELY in
   Catalyst expressions (sequence/explode + equi-join + exact bbox filter
   + least/greatest dedup) — whole-stage-codegen, no Python.
@@ -39,111 +43,119 @@ from ..functions.geometry import pip_contains_col, points_in_polygons
 # --- flagship: broadcast PIP join -------------------------------------------
 
 
+#: Finest grid level a polygon's covering may use. Cell ids pack
+#: (cx + 2^25) << 26 | (cy + 2^25); at level 25 every earthly coordinate
+#: keeps both halves inside their 26-bit fields.
+INDEX_MAX_LEVEL = 25
+#: A polygon is indexed at the finest level whose bbox covering fits this
+#: many cells.
+INDEX_MAX_COVER_CELLS = 64
+
+
 class BroadcastPolygonIndex:
     """Driver-built grid index over a small polygon side.
 
     polygons: list of dicts {key: any, polygons: [[ring=[(lon,lat)...]]]}.
-    Cells at `level` covering each polygon bbox map to candidate indexes —
-    the NumPy analog of the reference's STR-bulk-loaded RTree
-    (mod.rs:175, admin.rs:8-15).
+    Each polygon is registered in the cells covering its bbox on a planar
+    floor grid of size 360°/2^level — the NumPy analog of the reference's
+    STR-bulk-loaded RTree (mod.rs:175, admin.rs:8-15). The grid is derived
+    from the input, not configured: each polygon gets the finest level
+    ≤ INDEX_MAX_LEVEL whose bbox covering fits INDEX_MAX_COVER_CELLS
+    cells (`levels[i]`), so a district and a continent both land in a
+    handful of cells sized like themselves and a point's candidate list
+    stays short at any polygon scale. Levels nest (a cell at level l is
+    exactly four cells at l+1), so the covering only shrinks as the level
+    coarsens.
     """
 
     _OFF = 1 << 25  # planar cell ids stay positive for any earthly coord
 
-    def __init__(self, polygon_rows: list[dict], level: int = 12, max_cells: int = 256):
+    def __init__(self, polygon_rows: list[dict]):
         self.keys = []
         self.polys = []
-        # coverings adapt per polygon (big polygon → coarser cells), so the
-        # index is a map per level actually used: level → {cell → [poly idx]}.
-        # The bucketing grid is INTERNAL to this index (the exact PIP
-        # refine decides membership), so cells are a plain planar floor
-        # grid at size 360°/2^level packed into one long — the
-        # space-filling-curve encode the r5 index used cost ~18 ms per
-        # 65k-row batch in lookup() for locality that a per-batch
-        # candidate probe never exploits.
-        self.cell_maps: dict[int, dict[int, list[int]]] = {}
-        for idx, row in enumerate(polygon_rows):
+        # every ring in candidate order; holes are rings 1.. of each
+        # polygon (the layout points_in_polygons reads)
+        ring_xy: list[np.ndarray] = []
+        ring_hole: list[bool] = []
+        ci_ring_off = [0]
+        for row in polygon_rows:
             rings = [
                 [np.asarray(ring, dtype=np.float64).reshape(-1, 2) for ring in poly]
                 for poly in row["polygons"]
             ]
-            pts = np.vstack([r for poly in rings for r in poly])
             self.keys.append(row["key"])
             self.polys.append(rings)
-            x0, y0 = pts[:, 0].min(), pts[:, 1].min()
-            x1, y1 = pts[:, 0].max(), pts[:, 1].max()
-            # coarsen per polygon until its bbox covering fits max_cells
-            lvl = max(0, int(level))
-            while lvl > 0:
-                s = 360.0 / (1 << lvl)
-                nx = int(np.floor(x1 / s)) - int(np.floor(x0 / s)) + 1
-                ny = int(np.floor(y1 / s)) - int(np.floor(y0 / s)) + 1
-                if nx * ny <= max_cells:
-                    break
-                lvl -= 1
-            s = 360.0 / (1 << lvl)
-            cx0, cx1 = int(np.floor(x0 / s)), int(np.floor(x1 / s))
-            cy0, cy1 = int(np.floor(y0 / s)), int(np.floor(y1 / s))
-            cmap = self.cell_maps.setdefault(lvl, {})
-            for cx in range(cx0, cx1 + 1):
-                base = (cx + self._OFF) << 26
-                for cy in range(cy0, cy1 + 1):
-                    cmap.setdefault(base + cy + self._OFF, []).append(idx)
+            for poly in rings:
+                ring_xy.extend(poly)
+                ring_hole.extend(hi > 0 for hi in range(len(poly)))
+            ci_ring_off.append(len(ring_xy))
+        xy = np.concatenate(ring_xy) if ring_xy else np.empty((0, 2))
+        ring_len = np.array([len(r) for r in ring_xy], dtype=np.int64)
+        self._ci_ring_off = np.asarray(ci_ring_off, np.int64)
+        self._ci_nrings = np.diff(self._ci_ring_off)
+
+        # per-polygon bbox: coordinates are contiguous per candidate
+        ring_end = np.concatenate([[0], np.cumsum(ring_len)])
+        pt_off = ring_end[self._ci_ring_off]
+        has_pts = np.diff(pt_off) > 0
+        bbox = np.zeros((len(self.keys), 4))
+        if has_pts.any():
+            lo = pt_off[:-1][has_pts]
+            bbox[has_pts, :2] = np.minimum.reduceat(xy, lo, axis=0)
+            bbox[has_pts, 2:] = np.maximum.reduceat(xy, lo, axis=0)
+        if not np.isfinite(bbox).all():
+            raise ValueError("polygon coordinates must be finite")
+
+        # per-polygon level: the finest one whose covering fits (level 0
+        # always does — two 360° columns by one or two rows). The grid is
+        # INTERNAL to this index (the exact PIP refine decides
+        # membership), so cells are a plain planar floor grid packed into
+        # one long: a space-filling-curve encode would cost lookup() time
+        # for locality that a per-batch candidate probe never exploits.
+        lv = np.arange(INDEX_MAX_LEVEL, -1, -1)
+        # (polygon, x0/y0/x1/y1, level) cell indexes, as lookup() floors
+        fl = np.floor(bbox[:, :, None] / (360.0 / (1 << lv))).astype(np.int64)
+        span = fl[:, 2:] - fl[:, :2] + 1  # (polygon, nx/ny, level)
+        pick = np.argmax(span.prod(axis=1) <= INDEX_MAX_COVER_CELLS, axis=1)
+        self.levels = lv[pick]
+        at = np.arange(len(pick))
+        cx0, cy0 = fl[at, 0, pick], fl[at, 1, pick]
+        nx, ny = span[at, 0, pick], span[at, 1, pick]
+        # coverings, all polygons at once: cell k of polygon p's
+        # nx × ny block is (cx0 + k // ny, cy0 + k % ny)
+        n = np.where(has_pts, nx * ny, 0)
+        poly = np.repeat(np.arange(len(n)), n)
+        k = np.arange(poly.size) - np.repeat(np.cumsum(n) - n, n)
+        cells = ((cx0[poly] + k // ny[poly] + self._OFF) << 26) + (
+            cy0[poly] + k % ny[poly] + self._OFF
+        )
+        lvl = self.levels[poly]
         # CSR form per level (sorted cell array + offsets + flat candidate
-        # indexes): lookup resolves a batch's unique cells with ONE
-        # searchsorted instead of a Python dict probe per cell
+        # indexes, each cell's candidates in list order): lookup resolves
+        # a batch's unique cells with ONE searchsorted instead of a
+        # Python dict probe per cell
+        order = np.lexsort((poly, cells, lvl))
+        poly, cells, lvl = poly[order], cells[order], lvl[order]
         self._csr: dict[int, tuple[np.ndarray, np.ndarray, np.ndarray]] = {}
-        for lvl, cmap in self.cell_maps.items():
-            cs = np.fromiter(cmap.keys(), dtype=np.int64, count=len(cmap))
-            order = np.argsort(cs)
-            cs = cs[order]
-            cand_lists = list(cmap.values())
-            cnts = np.array([len(cand_lists[i]) for i in order], dtype=np.int64)
-            starts = np.concatenate([[0], np.cumsum(cnts)]).astype(np.int64)
-            flat = np.concatenate(
-                [np.asarray(cand_lists[i], dtype=np.int64) for i in order]
-            ) if len(order) else np.empty(0, np.int64)
-            self._csr[lvl] = (cs, starts, flat)
+        used, lvl_start = np.unique(lvl, return_index=True)
+        for l, a, b in zip(used.tolist(), lvl_start, [*lvl_start[1:], len(lvl)]):
+            cs, first = np.unique(cells[a:b], return_index=True)
+            self._csr[l] = (cs, np.append(first, b - a), poly[a:b])
+
         # flat ring/edge tables for the BATCHED exact refine: one
         # vectorized parity pass over every (point, candidate) pair's
         # edges replaces one points_in_polygons call per candidate
-        # polygon per batch. Ring layout mirrors points_in_polygons:
-        # empty polygons skipped, rings < 3 points contribute 0 edges
-        # (never inside / never a hole hit), holes are rings 1.. of
-        # each polygon.
-        ex0p, ey0p, ex1p, ey1p = [], [], [], []
-        ring_ecnt: list[int] = []
-        ring_hole: list[bool] = []
-        ring_newpoly: list[bool] = []
-        ci_ring_off = [0]
-        for rings_list in self.polys:
-            for rings in rings_list:
-                if not len(rings):
-                    continue
-                for hi, ring in enumerate(rings):
-                    r = np.asarray(ring, np.float64).reshape(-1, 2)
-                    ne = len(r) - 1 if len(r) >= 3 else 0
-                    if ne > 0:
-                        ex0p.append(r[:-1, 0])
-                        ey0p.append(r[:-1, 1])
-                        ex1p.append(r[1:, 0])
-                        ey1p.append(r[1:, 1])
-                    ring_ecnt.append(ne)
-                    ring_hole.append(hi > 0)
-                    ring_newpoly.append(hi == 0)
-            ci_ring_off.append(len(ring_ecnt))
-        self._ex0 = np.concatenate(ex0p) if ex0p else np.empty(0)
-        self._ey0 = np.concatenate(ey0p) if ey0p else np.empty(0)
-        self._ex1 = np.concatenate(ex1p) if ex1p else np.empty(0)
-        self._ey1 = np.concatenate(ey1p) if ey1p else np.empty(0)
-        self._ring_ecnt = np.asarray(ring_ecnt, np.int64)
-        self._ring_estart = np.concatenate(
-            [[0], np.cumsum(self._ring_ecnt)]
-        ).astype(np.int64)[:-1]
+        # polygon per batch. Rings < 3 points contribute 0 edges (never
+        # inside / never a hole hit), as in points_in_polygons.
+        self._ring_ecnt = np.where(ring_len >= 3, ring_len - 1, 0)
+        self._ring_estart = np.cumsum(self._ring_ecnt) - self._ring_ecnt
+        e = np.repeat(ring_end[:-1] - self._ring_estart, self._ring_ecnt) + np.arange(
+            int(self._ring_ecnt.sum())
+        )
+        self._ex0, self._ey0 = xy[e, 0], xy[e, 1]
+        self._ex1, self._ey1 = xy[e + 1, 0], xy[e + 1, 1]
         self._ring_hole = np.asarray(ring_hole, bool)
-        self._ring_newpoly = np.asarray(ring_newpoly, bool)
-        self._ci_ring_off = np.asarray(ci_ring_off, np.int64)
-        self._ci_nrings = np.diff(self._ci_ring_off)
+        self._ring_newpoly = ~self._ring_hole
         # per-candidate edge volume, for chunking the pair expansion
         ring_etot = np.concatenate([[0], np.cumsum(self._ring_ecnt)])
         self._ci_etot = (
@@ -289,11 +301,10 @@ def pip_join_broadcast(
     lon_col: str = "lon",
     lat_col: str = "lat",
     out_col: str = "polygon_key",
-    level: int = 12,
 ) -> DataFrame:
     """Annotate each point row with the key of the first polygon containing
     it (NULL if none). Big side never shuffles."""
-    index = BroadcastPolygonIndex(polygon_rows, level=level)
+    index = BroadcastPolygonIndex(polygon_rows)
     keys = index.keys
     fields = points.schema.fieldNames()
     out_schema = points.schema.simpleString()[7:-1] + f",{out_col} string"
@@ -317,7 +328,6 @@ def pip_tile_rollup(
     grid: str = "hex",
     lon_col: str = "lon",
     lat_col: str = "lat",
-    level: int = 12,
 ) -> DataFrame:
     """Fused flagship pipeline: PIP + tile encode + per-partition partial
     counts in ONE Arrow kernel, then a tiny final agg.
@@ -327,7 +337,7 @@ def pip_tile_rollup(
     point set and gives the Python stage true map-side combine — the
     shuffle is O(polygons × tiles), independent of input rows.
     """
-    index = BroadcastPolygonIndex(polygon_rows, level=level)
+    index = BroadcastPolygonIndex(polygon_rows)
     keys = list(index.keys)
     karr = np.array([str(k) for k in keys] + [None], dtype=object)
 
@@ -417,7 +427,15 @@ def pip_join_cells(
     The point side needs no explicit widening: the pinned shuffle join
     redistributes it across `spark.sql.shuffle.partitions` anyway, so
     the ray-cast refine always runs at full parallelism and a narrow
-    single-file input costs no extra round-robin exchange."""
+    single-file input costs no extra round-robin exchange.
+
+    Memory risk of the SHUFFLE_HASH pin: each reduce task builds an
+    in-memory hash table from its whole partition of the polygon-cell
+    side, and that table cannot spill to disk. One hot cell key (many
+    polygons sharing a cell, as a coarse `level` makes them) can
+    therefore OOM an executor, where a sort-merge join would have
+    spilled. Pick `level` so cells are not much larger than the typical
+    polygon."""
     s = 360.0 / (1 << level)
 
     pts = points.withColumn(
@@ -527,6 +545,11 @@ def bbox_self_join(
     a single-file input replicated far beyond its size (measured: a
     round-robin exchange costs ~3× the whole query at bench scale,
     and helps only above ~4× replication on 32 cores).
+
+    Memory risk of the pin: the hash-join build side is held in memory
+    per reduce partition and cannot spill, so one hot cell (many boxes
+    sharing a `cell`) can OOM an executor where sort-merge would spill.
+    Pick `cell` near the typical box size so per-cell rows stay small.
     """
     withc = boxes.withColumn(
         "_cell", F.explode(_bbox_cells(F.col("x0"), F.col("y0"), F.col("x1"), F.col("y1"), pad, cell))

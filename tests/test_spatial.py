@@ -2,6 +2,7 @@
 bbox self-join, tile assignment, kNN."""
 
 import numpy as np
+import pandas as pd
 import pyspark.sql.functions as F
 
 from osm_pbf2json_spark.operators import spatial as S
@@ -472,7 +473,7 @@ def test_broadcast_index_batched_refine_matches_bruteforce():
                     (x0 + 0.10, y0 + 0.10)]
             rows.append({"key": k, "polygons": [[ring, hole]]})
             k += 1
-    idx = BroadcastPolygonIndex(rows, level=12)
+    idx = BroadcastPolygonIndex(rows)
     lon = rng.uniform(0, 7.5, 8000)
     lat = rng.uniform(0, 6.5, 8000)
     got = idx.lookup(lon, lat)  # 750 polygons -> batched refine path
@@ -485,3 +486,140 @@ def test_broadcast_index_batched_refine_matches_bruteforce():
         ref[m] = ci
     assert (got == ref).all()
     assert (got >= 0).sum() > 1000  # hits actually exercised
+
+
+def _ring_parity(px, py, ring):
+    """Even-odd ray cast of points against one closed ring, edge by edge."""
+    r = np.asarray(ring, dtype=np.float64)
+    inside = np.zeros(len(px), dtype=bool)
+    if len(r) < 3:
+        return inside
+    for (x0, y0), (x1, y1) in zip(r[:-1], r[1:]):
+        with np.errstate(divide="ignore", invalid="ignore"):
+            xint = x0 + (py - y0) * (x1 - x0) / (y1 - y0)
+        inside ^= ((y0 > py) != (y1 > py)) & (px < xint)
+    return inside
+
+
+def _first_match(lon, lat, rows):
+    """Index of the first polygon row (list order) holding each point, -1
+    if none: every point against every ring of every polygon, holes
+    excluded."""
+    out = np.full(len(lon), -1, np.int64)
+    for ci, row in enumerate(rows):
+        hit = np.zeros(len(lon), dtype=bool)
+        for rings in row["polygons"]:
+            if not rings:
+                continue
+            inside = _ring_parity(lon, lat, rings[0])
+            for hole in rings[1:]:
+                inside &= ~_ring_parity(lon, lat, hole)
+            hit |= inside
+        out[hit & (out < 0)] = ci
+    return out
+
+
+def _square(cx, cy, half):
+    return [(cx - half, cy - half), (cx + half, cy - half), (cx + half, cy + half),
+            (cx - half, cy + half), (cx - half, cy - half)]
+
+
+def test_broadcast_index_mixed_scales_and_overlaps_match_bruteforce():
+    """One index over polygons from 20° wide down to sub-metre (smaller
+    than one finest-level cell), overlapping across levels: every
+    polygon's derived level stays within the cell-id packing and its
+    covering within the cell cap, and lookup equals the first-match
+    brute force on both refine paths."""
+    from osm_pbf2json_spark.operators.spatial import (
+        INDEX_MAX_COVER_CELLS,
+        INDEX_MAX_LEVEL,
+        BroadcastPolygonIndex,
+    )
+
+    rng = np.random.Generator(np.random.PCG64(5))
+    finest = 360.0 / (1 << INDEX_MAX_LEVEL)
+    tiny_half = finest / 4  # squares half a finest cell (~0.6 m) wide
+    rows = []
+    # small polygons listed BEFORE the big one win where they overlap it
+    for k in range(40):
+        cx, cy = rng.uniform(-8, 8), rng.uniform(-3, 13)
+        rows.append({"key": f"mid{k}", "polygons": [[_square(cx, cy, rng.uniform(0.005, 0.5))]]})
+    tiny_centers = np.column_stack([rng.uniform(-9, 9, 600), rng.uniform(-4, 14, 600)])
+    for k, (cx, cy) in enumerate(tiny_centers[:300]):
+        rows.append({"key": f"tinyA{k}", "polygons": [[_square(cx, cy, tiny_half)]]})
+    big_idx = len(rows)
+    rows.append({"key": "big", "polygons": [[_square(0.0, 5.0, 10.0), _square(3.0, 8.0, 1.5)]]})
+    # ... and the ones listed AFTER it only where the big one has a hole
+    for k, (cx, cy) in enumerate(tiny_centers[300:]):
+        rows.append({"key": f"tinyB{k}", "polygons": [[_square(cx, cy, tiny_half)]]})
+    rows.append({"key": "over_hole", "polygons": [[_square(3.0, 8.0, 2.0)]]})
+    rows.append({"key": "continent", "polygons": [[_square(15.0, 5.0, 12.0)]]})
+
+    idx = BroadcastPolygonIndex(rows)
+    assert (idx.levels <= INDEX_MAX_LEVEL).all() and (idx.levels >= 0).all()
+    assert idx.levels[big_idx] < idx.levels[0] < idx.levels[big_idx + 1] == INDEX_MAX_LEVEL
+    assert len(set(idx.levels.tolist())) >= 6
+    flat = np.concatenate([f for _, _, f in idx._csr.values()])
+    assert (np.bincount(flat, minlength=len(rows)) <= INDEX_MAX_COVER_CELLS).all()
+
+    lon = np.concatenate([
+        rng.uniform(-12, 30, 8000),
+        rng.uniform(-1, 7, 4000),  # the hole and its overlapping square
+        np.repeat(tiny_centers[:, 0], 6) + rng.normal(0, tiny_half, 3600),
+    ])
+    lat = np.concatenate([
+        rng.uniform(-8, 18, 8000),
+        rng.uniform(5, 11, 4000),
+        np.repeat(tiny_centers[:, 1], 6) + rng.normal(0, tiny_half, 3600),
+    ])
+    want = _first_match(lon, lat, rows)
+    got = idx.lookup(lon, lat)  # > 512 candidates: batched refine
+    assert (got == want).all()
+    part = slice(0, 2000)  # few candidates: per-polygon refine
+    assert (idx.lookup(lon[part], lat[part]) == want[part]).all()
+    winners = {rows[i]["key"].rstrip("0123456789") for i in np.unique(want[want >= 0])}
+    assert winners == {"mid", "tinyA", "tinyB", "big", "over_hole", "continent"}
+    assert (want >= big_idx + 1).sum() > 100  # winners listed after "big"
+    assert ((want >= 0) & (want < 40)).sum() > 100  # winners listed before it
+
+
+def test_pip_tile_rollup_matches_bruteforce_counts(spark):
+    """The fused flagship's (polygon, tile) counts equal a NumPy
+    brute-force PIP count plus the same hex encode, holes included."""
+    from osm_pbf2json_spark.functions import tiles as T
+
+    rng = np.random.Generator(np.random.PCG64(17))
+    n, g = 4000, 6
+    xs, ys = np.linspace(13.0, 13.6, g + 1), np.linspace(52.3, 52.6, g + 1)
+    vx, vy = np.meshgrid(xs, ys, indexing="ij")
+    vx[1:-1, 1:-1] += rng.uniform(-0.01, 0.01, (g - 1, g - 1))
+    vy[1:-1, 1:-1] += rng.uniform(-0.005, 0.005, (g - 1, g - 1))
+    rows = []
+    for i in range(g):
+        for j in range(g):
+            ring = [(vx[i, j], vy[i, j]), (vx[i + 1, j], vy[i + 1, j]),
+                    (vx[i + 1, j + 1], vy[i + 1, j + 1]), (vx[i, j + 1], vy[i, j + 1]),
+                    (vx[i, j], vy[i, j])]
+            rings = [[(float(x), float(y)) for x, y in ring]]
+            if (i + j) % 3 == 0:
+                cx, cy = float(np.mean(vx[i:i + 2, j:j + 2])), float(np.mean(vy[i:i + 2, j:j + 2]))
+                rings.append(_square(cx, cy, 0.012))
+            rows.append({"key": f"d{i}{j}", "polygons": [rings]})
+    centers = rng.uniform((12.95, 52.28), (13.65, 52.62), (12, 2))
+    which = rng.integers(0, len(centers), n)
+    pts = centers[which] + rng.normal(0, 0.02, (n, 2))
+    lon, lat = pts[:, 0], pts[:, 1]
+
+    hit = _first_match(lon, lat, rows)
+    keys = np.array([r["key"] for r in rows] + ["-"], dtype=object)  # -1 → "-"
+    want = (
+        pd.DataFrame({"polygon_key": keys[hit], "tile": T.hex_cell(lon, lat, 9)})
+        .value_counts().to_dict()
+    )
+    df = spark.createDataFrame(pd.DataFrame({"lon": lon, "lat": lat})).repartition(3)
+    out = S.pip_tile_rollup(df, rows, res=9).toPandas().fillna({"polygon_key": "-"})
+    got = {(k, t): n for k, t, n in out[["polygon_key", "tile", "n_points"]].itertuples(index=False)}
+    assert got == want
+    per_poly = out.groupby("polygon_key")["n_points"].sum().to_dict()
+    assert per_poly == pd.Series(keys[hit]).value_counts().to_dict()
+    assert per_poly["-"] > 0 and len(per_poly) > 25  # misses and most districts hit
